@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from llm_rankers_spark.session import local_frame
+
 LANGS = ["python", "python", "python", "java", "scala", "go", "javascript"]
 EXT = {"python": "py", "java": "java", "scala": "scala", "go": "go", "javascript": "js"}
 HOT_TERMS = ["import", "def", "return", "self"]
@@ -185,4 +187,4 @@ def generate_queries(spark: SparkSession, corpus_terms: list[str], n_queries: in
         else:
             q = f"zzz_absent_{i} " + str(rng.choice(terms))
         rows.append((f"q{i}", q))
-    return spark.createDataFrame(rows, "qid string, query string")
+    return local_frame(spark, rows, "qid string, query string")

@@ -24,7 +24,7 @@ import re
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -145,3 +145,31 @@ def term_counts_col(col: Column | str, mode: str = "code") -> Column:
 
     # same duplicate-evaluation guard as tokens_col (guide §4.4)
     return _cnt.asNondeterministic()(F.col(col) if isinstance(col, str) else col)
+
+
+def spread_for_udf(
+    docs: DataFrame, n_rows: int | None = None, rows_per_task: int | None = None
+) -> DataFrame:
+    """Spread ``docs`` before a tokenizer-UDF stage so the stage can use
+    every core.
+
+    The UDF runs one task per input split, so an input with fewer splits
+    than ``defaultParallelism`` (a single parquet file, a coalesced scan)
+    tokenizes on fewer cores than the session has: it is round-robined to
+    ``defaultParallelism`` splits. Given ``n_rows`` and ``rows_per_task``,
+    the target also bounds the rows one task holds: an input whose splits
+    average more than twice ``rows_per_task`` rows spreads to
+    ``ceil(n_rows / rows_per_task)`` splits. An input already as fine as
+    the target is returned unchanged, so it pays no shuffle."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    try:
+        n_parts = docs.rdd.getNumPartitions()
+    except Exception:  # a streaming frame has no RDD
+        return docs
+    target, fat = par, False
+    if n_rows is not None and rows_per_task:
+        target = min(max(par, -(-n_rows // rows_per_task)), 65536)
+        fat = n_rows / max(n_parts, 1) > 2 * rows_per_task
+    if n_parts < par or (n_parts < target and fat):
+        return docs.repartition(target)
+    return docs

@@ -38,6 +38,7 @@ from llm_rankers_spark.functions import codec
 from llm_rankers_spark.functions.tokenize import tokens_col
 from llm_rankers_spark.functions.xxh64 import spark_term_bucket
 from llm_rankers_spark.operators.index_build import InvertedIndex
+from llm_rankers_spark.session import local_frame
 
 RESULT_SCHEMA = "qid string, ord long, score double"
 
@@ -45,9 +46,9 @@ RESULT_SCHEMA = "qid string, ord long, score double"
 #: actually skips). Accumulated by _block_max_arrays in whatever process
 #: runs it: inside Spark tasks they live in the python worker (invisible
 #: driver-side), so measurement drives the scorer in-process on collected
-#: posting rows — BENCH/wand_skip_r06.py does exactly that; the pytest in
-#: tests/test_wand_property.py asserts pruning engages on a constructed
-#: hot+rare corpus.
+#: posting rows — ``python bench_extra.py wand-skip`` (and ``wand-skip-big``)
+#: does exactly that; the pytest in tests/test_wand_property.py asserts
+#: pruning engages on a constructed hot+rare corpus.
 WAND_STATS = {"calls": 0, "intervals_total": 0, "intervals_scored": 0, "blocks_decoded": 0}
 
 #: Lists at most this long get whole-list decoded for presence-exact
@@ -697,7 +698,7 @@ def _search_driver_planned(
     qcounts = {r["qid"]: Counter(tokenize(r["query"] or "", meta.tokenizer_mode)) for r in qrows}
     distinct_terms = sorted({t for c in qcounts.values() for t in c})
     if not distinct_terms:
-        empty = queries.sparkSession.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+        empty = local_frame(queries.sparkSession, [], "qid string, docid string, rank int, score double, tag string")
         return empty
     n_docs = float(n_override if n_override is not None else meta.n_docs)
     df_in_rows = getattr(meta, "layout_version", 1) >= 3 and ts_override is None
@@ -710,7 +711,7 @@ def _search_driver_planned(
             qplan[qid] = [(t, float(qw)) for t, qw in counts.items()]
     else:
         if ts_override is not None:
-            all_terms_df = queries.sparkSession.createDataFrame([(t,) for t in distinct_terms], "term string")
+            all_terms_df = local_frame(queries.sparkSession, [(t,) for t in distinct_terms], "term string")
             ts = ts_override.join(F.broadcast(all_terms_df), "term", "left_semi")
         else:
             # df from the bucket-PRUNED postings instead of the full
@@ -753,7 +754,7 @@ def _search_driver_planned(
         # belong on search_distributed anyway).
         cand = postings.filter(F.col("term").isin(term_list))
     else:
-        terms_df = queries.sparkSession.createDataFrame([(t,) for t in term_list], "term string")
+        terms_df = local_frame(queries.sparkSession, [(t,) for t in term_list], "term string")
         cand = postings.join(F.broadcast(terms_df), "term", "left_semi")
 
     score_n_docs = n_docs if df_in_rows else None
@@ -902,9 +903,7 @@ def search_distributed(
     # replicate the (small) per-query weights to every shard and cogroup:
     # each task sees (shard's postings, full query plan) — no closures.
     # num_shards is metadata, so the shard-id list never touches the data.
-    shard_ids = queries.sparkSession.createDataFrame(
-        [(s,) for s in range(meta.num_shards)], "shard int"
-    )
+    shard_ids = local_frame(queries.sparkSession, [(s,) for s in range(meta.num_shards)], "shard int")
     qw_rep = qw.crossJoin(F.broadcast(shard_ids))
 
     score_n_docs = n_docs if df_in_rows else None
@@ -987,11 +986,9 @@ def bm25_dataframe_from_index(index: InvertedIndex, queries: DataFrame, k: int =
             for t, c in sorted(Counter(tokenize(r["query"] or "", m.tokenizer_mode)).items())
         ]
         if not data:
-            return queries.sparkSession.createDataFrame(
-                [], "qid string, docid string, rank int, score double"
-            )
+            return local_frame(queries.sparkSession, [], "qid string, docid string, rank int, score double")
         qt = F.broadcast(
-            queries.sparkSession.createDataFrame(data, "qid string, term string, qw long")
+            local_frame(queries.sparkSession, data, "qid string, term string, qw long")
         )
         terms = sorted({t for _, t, _ in data})
         if len(terms) <= 512:

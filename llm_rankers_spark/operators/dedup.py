@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from llm_rankers_spark.functions.tokenize import tokens_col
+from llm_rankers_spark.functions.tokenize import spread_for_udf, tokens_col
 
 # 31-bit Mersenne prime: (a*h + b) with a,b,h < 2^31 stays under 2^63, so
 # the universal-hash family is exact under ANSI arithmetic (no overflow).
@@ -83,19 +83,9 @@ def shingles_from_tokens(toks_col: str, k: int = 5):
 
 
 def _with_shingles(docs: DataFrame, id_col: str, content_col: str, k: int, mode: str = "simple") -> DataFrame:
-    # Bound tokenize-task size like build_index does (guide §2.5 input
-    # skew): a single fat input split (one parquet file, a coalesced scan)
-    # runs the tokenizer UDF + shingle explosion serially on ONE core.
-    # Repartition only when the inherited shape is coarser than the
-    # cluster's parallelism — a real corpus scan has plentiful splits and
-    # never pays this shuffle.
-    try:
-        n_parts = docs.rdd.getNumPartitions()
-    except Exception:
-        n_parts = None
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if n_parts is not None and n_parts < par:
-        docs = docs.repartition(par)
+    # a single fat input split (one parquet file, a coalesced scan) would
+    # run the tokenizer UDF + shingle explosion serially on ONE core
+    docs = spread_for_udf(docs)
     return (
         docs.select(F.col(id_col).alias("id"), tokens_col(content_col, mode=mode).alias("_toks"))
         .select("id", F.array_distinct(shingles_from_tokens("_toks", k)).alias("sh"))

@@ -11,30 +11,37 @@ Design for 10^12 files:
   per-shard sub-lists are mutually disjoint and term-aligned, making each
   (query, shard) an independent WAND traversal followed by a trivial
   disjoint top-k merge. No single task ever owns a whole hot posting list.
-- **Dense docid ordinals** assigned by global docid sort (range partition +
-  partition-offset pass) — deterministic, and ordinal order == docid order,
-  so the BM25 tie-break (score desc, docid asc) is an integer compare.
+- **Dense docid ordinals** assigned by global docid sort (a driver sort for
+  small corpora, else range partition + partition-offset pass) —
+  deterministic, and ordinal order == docid order, so the BM25 tie-break
+  (score desc, docid asc) is an integer compare.
 - **dl stored inline in the postings** (like Lucene norms): scoring is a
   sequential columnar read, never a join against a doc-length table.
-- **Per-shard manifest** (rows, terms, checksum) written after the build:
-  resume = skip the build when the manifest matches the input fingerprint
-  (count + docid checksum) — per-partition lineage per the north rule.
+- **Per-shard manifest** (lists, postings, term checksum) reported by the
+  pack tasks themselves through an accumulator, so the build never reads
+  its postings back: resume = skip the build when the manifest matches the
+  input fingerprint (count + docid checksum) — per-partition lineage per
+  the north rule; :func:`verify_index` is the independent recompute.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import zlib
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llm_rankers_spark import fsio
 from llm_rankers_spark.functions import codec
-from llm_rankers_spark.functions.tokenize import term_counts_col
+from llm_rankers_spark.functions.tokenize import spread_for_udf, term_counts_col
+from llm_rankers_spark.session import local_frame
 
 POSTINGS_SCHEMA = (
     "term string, shard int, bucket int, n long, docs_blob binary, tfs_blob binary, dls_blob binary, "
@@ -63,18 +70,25 @@ class IndexMeta:
 
 
 class InvertedIndex:
-    """Handle over the on-disk index (postings / doc_map / term_stats / meta)."""
+    """Handle over the on-disk index (postings / doc_map / term_stats / meta).
+
+    ``postings`` and ``doc_map`` are read once per handle: the relation
+    holds its file listing and schema, so later queries on the same handle
+    skip the listing job (the 64 ``bucket=`` dirs exceed Spark's parallel
+    discovery threshold) and the parquet schema job. A handle is therefore
+    a snapshot: rebuild an index in place and take a new handle
+    (:func:`load_index`) to see the new files."""
 
     def __init__(self, spark: SparkSession, path: str, meta: IndexMeta):
         self.spark = spark
         self.path = path
         self.meta = meta
 
-    @property
+    @cached_property
     def postings(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "postings"))
 
-    @property
+    @cached_property
     def doc_map(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "doc_map"))
 
@@ -148,38 +162,36 @@ DRIVER_ORDINALS_MAX = 65_536
 def _ordinals_auto(
     docs_slim: DataFrame, extra_cols: tuple[tuple[str, str], ...] = ()
 ) -> tuple[DataFrame, int, DataFrame | None]:
-    """Adaptive ordinal assignment. Small corpora (≤ DRIVER_ORDINALS_MAX,
-    decided by a short-circuiting limit probe) sort docids on the driver and
-    broadcast the (docid, ord) table — two cheap jobs instead of the range
-    sample + persist + per-partition count waves, which dominate small
-    builds (measured ~2.4 s of a 10.6 s sf0.1 build). Large corpora (and
-    inputs with duplicate docids, which the driver path cannot order
-    deterministically) take :func:`_slim_ordinals` unchanged.
+    """Adaptive ordinal assignment. Small corpora (≤ DRIVER_ORDINALS_MAX
+    rows) sort their docids on the driver and return the (docid[, extra
+    cols], ord) table as an Arrow-built local relation (:func:`local_frame`):
+    one bounded collect job, no Python worker, and the consumer's broadcast
+    of it is a JVM-only job. Large corpora, and inputs with duplicate or
+    null docids (which the driver sort cannot order the way Spark does),
+    take :func:`_slim_ordinals`.
+
+    The probe and the collect are one job: ``limit(N+1)`` short-circuits the
+    scan, so a large computed input never pays a full pass just to learn
+    it is big, at most N+1 rows reach the driver, and the row count comes
+    from the very rows collected (no probe/collect disagreement on a
+    non-deterministic input frame).
 
     Returns (ords_df, n_docs, slim_handle_or_None); callers must unpersist
     the handle when present (slim path only)."""
     spark = docs_slim.sparkSession
-    # bounded probe and collect FUSED into one job (round-6): limit(N+1)
-    # short-circuits the scan, so large COMPUTED inputs never pay a full
-    # pass just to learn they're big (round-4 review finding), at most
-    # N+1 rows ever reach the driver, and — because the count comes from
-    # the very rows materialized — the probe/collect disagreement a
-    # non-deterministic input frame could produce (round-4 ADVICE) is
-    # structurally gone
     rows = docs_slim.limit(DRIVER_ORDINALS_MAX + 1).collect()
     n = len(rows)
-    if n <= DRIVER_ORDINALS_MAX:
-        ids = [r[0] for r in rows]
-        if len(set(ids)) == len(ids):
-            order = sorted(range(len(ids)), key=lambda i: ids[i])
-            extra = "".join(f", {c} {t}" for c, t in extra_cols)
-            data = [(*rows[i], o) for o, i in enumerate(order)]
-            ords = spark.createDataFrame(data, f"docid string{extra}, ord long")
-            return ords, n, None
-        # duplicate docids: fall through — the distributed path assigns
-        # every row an ordinal (arbitrary-but-unique among duplicates)
-    ords, n_docs, slim = _slim_ordinals(docs_slim, extra_cols)
-    return ords, n_docs, slim
+    ids = [r[0] for r in rows]
+    if n <= DRIVER_ORDINALS_MAX and None not in ids and len(set(ids)) == n:
+        # Python str order is code-point order, which is the UTF-8 byte
+        # order Spark sorts strings by
+        order = sorted(range(n), key=ids.__getitem__)
+        extra = "".join(f", {c} {t}" for c, t in extra_cols)
+        data = [(*rows[i], o) for o, i in enumerate(order)]
+        return local_frame(spark, data, f"docid string{extra}, ord long"), n, None
+    # the distributed path assigns every row an ordinal (arbitrary-but-unique
+    # among duplicates)
+    return _slim_ordinals(docs_slim, extra_cols)
 
 
 def _slim_ordinals(
@@ -233,14 +245,56 @@ def _slim_ordinals(
 PACK_BUCKET_MAX_GROUP_ROWS = 150_000
 
 
+class _PackReport(AccumulatorParam):
+    """Accumulator merge for the pack tasks' manifest report, ``{group key:
+    {shard: (lists, postings, term_crc)}}``. A group's entry REPLACES any
+    earlier entry under the same key: a retried or speculative task that
+    reports its group again cannot double-count."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, other: dict) -> dict:
+        acc.update(other)
+        return acc
+
+
+def _group_report(packed: pd.DataFrame) -> dict[int, tuple[int, int, int]]:
+    """{shard: (lists, postings, term_crc)} of one pack group's output rows —
+    the aggregates :func:`verify_index` recomputes with ``count``,
+    ``sum(n)`` and ``sum(crc32(term))``."""
+    crc = np.fromiter((zlib.crc32(t.encode("utf-8")) for t in packed["term"]), np.int64, len(packed))
+    shards, inv = np.unique(packed["shard"].to_numpy(np.int64), return_inverse=True)
+    postings = np.zeros(shards.size, np.int64)
+    np.add.at(postings, inv, packed["n"].to_numpy(np.int64))
+    term_crc = np.zeros(shards.size, np.int64)
+    np.add.at(term_crc, inv, crc)
+    lists = np.bincount(inv, minlength=shards.size)
+    return {int(s): (int(c), int(n), int(t)) for s, c, n, t in zip(shards, lists, postings, term_crc)}
+
+
+def _manifest_shards(report: dict) -> list[dict]:
+    """Per-shard manifest entries, summed over the pack groups' reports."""
+    totals: dict[int, tuple[int, int, int]] = {}
+    for shards in report.values():
+        for shard, triple in shards.items():
+            totals[shard] = tuple(a + b for a, b in zip(totals.get(shard, (0, 0, 0)), triple))
+    return [
+        {"shard": s, "lists": t[0], "postings": t[1], "term_crc": t[2]}
+        for s, t in sorted(totals.items())
+    ]
+
+
 def _pack_and_write(
     spark: SparkSession, td: DataFrame, path: str, avgdl: float, k1: float, b: float,
     bake_df: bool = True, pack_group: str = "auto", num_buckets: int = NUM_BUCKETS,
     n_docs: int | None = None, explain_out: dict | None = None,
     postings_rows: int | None = None,
-) -> None:
+) -> list[dict]:
     """Pack posting lists per (term, shard) and write hive-partitioned by
     term bucket. ``td``: (ord, dl, term, tf, shard) real postings only.
+    Returns the per-shard manifest entries (lists, postings, term_crc) the
+    pack tasks reported while writing (:func:`_manifest_shards`).
 
     ``pack_group`` picks the pack-task grouping — a task-memory vs
     build-cost trade-off with a hot-term skew bound:
@@ -361,7 +415,14 @@ def _pack_and_write(
     schema = POSTINGS_SCHEMA + (", df long" if in_group_df else "")
     td_b = td.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)))
     group_cols = ["bucket"] if pack_group == "bucket" else ["shard", "bucket"]
-    postings = td_b.groupBy(*group_cols).applyInPandas(lambda key, pdf: pack(pdf), schema=schema)
+    report = spark.sparkContext.accumulator({}, _PackReport())
+
+    def pack_and_report(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        packed = pack(pdf)
+        report.add({tuple(int(k) for k in key): _group_report(packed)})
+        return packed
+
+    postings = td_b.groupBy(*group_cols).applyInPandas(pack_and_report, schema=schema)
     if bake_df and not in_group_df:
         # shard_bucket mode: global df from a slim (term) count over the
         # pre-pack rows (map-side combinable; one row per (doc, term) so
@@ -380,11 +441,13 @@ def _pack_and_write(
     # stays a plain column (query-time grouping shuffles on it regardless; a
     # production deployment would ALSO bucketBy(shard) into a table).
     postings.write.mode("overwrite").partitionBy("bucket").parquet(os.path.join(path, "postings"))
+    return _manifest_shards(report.value)
 
 
 def _manifest_and_meta(
     spark: SparkSession,
     path: str,
+    shards: list[dict],
     n_docs: int,
     avgdl: float,
     fp: str,
@@ -397,24 +460,9 @@ def _manifest_and_meta(
     build_metrics: dict | None = None,
     num_buckets: int = NUM_BUCKETS,
 ) -> InvertedIndex:
-    shard_stats = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("lists"),
-            F.sum("n").alias("postings"),
-            F.sum(F.crc32(F.col("term"))).alias("term_crc"),
-        )
-        .orderBy("shard")
-        .collect()
-    )
-    manifest = {
-        "shards": [
-            {"shard": r["shard"], "lists": r["lists"], "postings": r["postings"], "term_crc": r["term_crc"]}
-            for r in shard_stats
-        ],
-        "input_fingerprint": fp,
-    }
+    """Write the lineage manifest (``shards`` as reported by the pack tasks)
+    and the index meta; returns the handle. Reads no index data."""
+    manifest = {"shards": shards, "input_fingerprint": fp}
     if build_metrics:
         # north-rule "per-partition lineage + metrics": phase wall-clocks
         # and throughput ride the same manifest the per-shard lineage
@@ -507,7 +555,8 @@ def build_index_from_forward(
     doc_map_out.write.mode("overwrite").parquet(os.path.join(path, "doc_map"))
     if slim is not None:
         slim.unpersist()  # ords fully materialized by the doc_map write
-    doc_map_df = spark.read.parquet(os.path.join(path, "doc_map"))
+    # the schema is known: reading with it skips the parquet schema job
+    doc_map_df = spark.read.schema(doc_map_out.schema).parquet(os.path.join(path, "doc_map"))
     stats = obs.get
     avgdl = float(stats["sum_dl"] or 0) / n_docs if n_docs else 0.0
     fp = f"{n_docs}:{stats['crc']}"
@@ -520,12 +569,12 @@ def build_index_from_forward(
         .withColumn("shard", (F.col("ord") / F.lit(shard_size)).cast("int"))
         .select("ord", "dl", "term", "tf", "shard")
     )
-    _pack_and_write(
+    shards = _pack_and_write(
         spark, td, path, avgdl, k1, b, bake_df=bake_df, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs,
     )
     return _manifest_and_meta(
-        spark, path, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
+        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
         layout_version=LAYOUT_VERSION if bake_df else 2, num_buckets=num_buckets,
     )
 
@@ -558,11 +607,18 @@ def build_index(
     under scale and extreme hot-term skew (see :func:`_pack_and_write`) at
     the cost of one extra slim scan for the df bake.
 
-    Plan shape (all shuffles are on keys we immediately exploit):
-      tokenize (Arrow UDF) → ordinal assignment (range shuffle on docid)
-      → explode → partial-agg tf per (term, ord) (map-side combine)
-      → shard by ord range → pack per (term, shard) (applyInPandas)
-      → write parquet partitioned by shard.
+    Plan shape (every shuffle is on a key the next step exploits):
+      ordinals (:func:`_ordinals_auto`: driver sort of ≤ 65,536 docids into
+      a broadcast local relation, else a range shuffle on the slim docid
+      column) → spread the input over ≥ defaultParallelism tasks when it
+      has fewer splits (:func:`spread_for_udf`, round-robin) → tokenize and
+      count tf in one Arrow UDF → broadcast-join the ordinals → posexplode
+      → forward checkpoint (parquet; corpus stats observed on the write)
+      → doc_map = the checkpoint's first row per doc (no shuffle) → hash
+      shuffle on the term bucket (or (shard, bucket)) → pack per
+      (term, shard) in applyInPandas, each task reporting its per-shard
+      manifest entries → postings parquet partitioned by bucket
+      → manifest and meta JSON. Nothing is read back after the pack.
     """
     spark = docs.sparkSession
 
@@ -593,37 +649,30 @@ def build_index(
             print(f"[build-phase] {name}: {now - _t0:.1f}s", flush=True)
         _t0 = now
 
-    # --- dense ordinals by docid order (deterministic, distributed) -------
-    # Two-pass Arrow-native dense rank over a SLIM docid projection: range
-    # partition + sort the docids alone (a few MB per million docs), count
-    # rows per partition, assign ordinal = partition offset + local position.
-    # The heavy token arrays are NEVER shuffled or cached for this — the
-    # ordinal table joins back (broadcast when it fits, hash join beyond);
-    # measured: shuffling+persisting the token arrays cost a core-count-
-    # independent ~15s per 100k docs, the slim pass is milliseconds.
+    # --- dense ordinals by docid order (deterministic) ---------------------
+    # Over a SLIM docid projection: a driver sort for small corpora, else a
+    # range partition + sort of the docids alone (a few MB per million
+    # docs) with ordinal = partition offset + local position. The heavy
+    # token arrays are NEVER shuffled or cached for this — the ordinal table
+    # joins back (broadcast when it fits, hash join beyond); measured:
+    # shuffling+persisting the token arrays cost a core-count-independent
+    # ~15s per 100k docs, the slim pass is milliseconds.
     ords, n_docs, slim = _ordinals_auto(docs.select("docid"))
     _phase("slim_ordinals")
 
     shard_size = max(1, -(-n_docs // num_shards))
 
-    # --- bound tokenize-task size (docs per task) --------------------------
-    # The tokenize→explode→checkpoint stage inflates its input ~10×: a task
-    # holding D docs pipelines D × terms-per-doc exploded rows through the
-    # parquet writer in one go. A scan that coalesces small files up to
-    # maxPartitionBytes (or a fat Iceberg file) hands this stage tasks of
-    # 10⁴-10⁵ docs, and the writer/GC anti-scales: measured local[8], 100k
-    # docs, 8 as-read partitions → 253s vs 64 partitions → 82s (3.1×) for
-    # the IDENTICAL build. Repartition when the inherited shape is fat;
-    # skip when the input is already finer than the target (the common case
-    # on a real cluster, where the 10^12-file architecture builds bounded
-    # document-partitioned segments and input splits are plentiful) — then
-    # no shuffle is added.
+    # --- spread the tokenize stage over every core ------------------------
+    # The tokenize→explode→checkpoint stage runs one task per input split
+    # and inflates its input ~10×. A single-file input tokenizes on one
+    # core; a scan that coalesces small files up to maxPartitionBytes (or a
+    # fat Iceberg file) hands it tasks of 10⁴-10⁵ docs, and the writer/GC
+    # anti-scales: measured local[8], 100k docs, 8 as-read partitions → 253s
+    # vs 64 partitions → 82s (3.1×) for the IDENTICAL build. An input that
+    # is already finer than the target (the common case on a real cluster)
+    # gets no shuffle.
     docs_per_task = int(os.environ.get("LLMRS_BUILD_DOCS_PER_TASK", "2000"))
-    parallelism = spark.sparkContext.defaultParallelism
-    n_parts = docs.rdd.getNumPartitions()
-    target_parts = min(max(parallelism, -(-n_docs // docs_per_task)), 65536)
-    if n_parts < target_parts and n_docs / max(n_parts, 1) > 2 * docs_per_task:
-        docs = docs.repartition(target_parts)
+    docs = spread_for_udf(docs, n_rows=n_docs, rows_per_task=docs_per_task)
 
     # tf is counted inside the tokenizer UDF (term_counts_col): one row per
     # (doc, distinct term) comes out of the explode, so no corpus-sized
@@ -661,7 +710,7 @@ def build_index(
     obs = Observation("build_stats")
     is_first = F.col("pos") == 0
     td_path = os.path.join(path, "_td_checkpoint")
-    (
+    ckpt = (
         with_ord.select(
             "ord", "docid", "content_sha256", "dl", F.posexplode("counts").alias("pos", "tc")
         )
@@ -682,24 +731,24 @@ def build_index(
             is_first.alias("first"),
             F.col("tc.term").alias("term"), F.col("tc.tf").cast("long").alias("tf"),
         )
-        .observe(
-            obs,
-            F.sum(F.when(F.col("first"), F.col("dl"))).alias("sum_dl"),
-            F.sum(F.when(F.col("first"), F.crc32(F.col("docid")))).alias("crc"),
-            # exact postings-row count (tf>0; sentinels excluded) rides the
-            # same write — feeds the pack-mode cutover with actual rows
-            F.sum(F.when(F.col("tf") > 0, F.lit(1)).otherwise(F.lit(0))).alias("postings_rows"),
-        )
-        .write.mode("overwrite")
-        .option("compression", os.environ.get("LLMRS_CKPT_CODEC", "zstd"))
-        .parquet(td_path)
     )
+    ckpt.observe(
+        obs,
+        F.sum(F.when(F.col("first"), F.col("dl"))).alias("sum_dl"),
+        F.sum(F.when(F.col("first"), F.crc32(F.col("docid")))).alias("crc"),
+        # exact postings-row count (tf>0; sentinels excluded) rides the
+        # same write — feeds the pack-mode cutover with actual rows
+        F.sum(F.when(F.col("tf") > 0, F.lit(1)).otherwise(F.lit(0))).alias("postings_rows"),
+    ).write.mode("overwrite").option(
+        "compression", os.environ.get("LLMRS_CKPT_CODEC", "zstd")
+    ).parquet(td_path)
     if slim is not None:
         slim.unpersist()  # ords fully materialized into the checkpoint write
     stats = obs.get
     avgdl = float(stats["sum_dl"] or 0) / n_docs if n_docs else 0.0
     fp = f"{n_docs}:{stats['crc']}"
-    td_full = spark.read.parquet(td_path)
+    # the schema is known: reading with it skips the parquet schema job
+    td_full = spark.read.schema(ckpt.schema).parquet(td_path)
     # tf=0 sentinel rows exist only to carry empty docs into doc_map;
     # shard is recomputed from ord (not stored)
     td = (
@@ -719,7 +768,7 @@ def build_index(
     # corpus has millions of rare identifier terms, and per-group Arrow
     # overhead on millions of tiny groups dominates; bucketing amortizes it
     # while each term still packs independently inside the group.
-    _pack_and_write(
+    shards = _pack_and_write(
         spark, td, path, avgdl, k1, b, bake_df=bake_df, pack_group=pack_group,
         num_buckets=num_buckets, n_docs=n_docs, explain_out=explain_out,
         postings_rows=int(stats["postings_rows"] or 0),
@@ -728,7 +777,7 @@ def build_index(
 
     wall = time.perf_counter() - _build_start
     idx = _manifest_and_meta(
-        spark, path, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
+        spark, path, shards, n_docs, avgdl, fp, num_shards, shard_size, tokenizer_mode, k1, b,
         layout_version=expected_layout, num_buckets=num_buckets,
         build_metrics={
             "phase_seconds": _phase_seconds,

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from llm_rankers_spark.session import local_frame
+
 TREC_SCHEMA = "qid string, q0 string, docid string, rank int, score double, tag string"
 
 
@@ -104,7 +106,7 @@ def append_trec_run(run: DataFrame, path: str, tag: str = "llm_rankers_spark") -
         done = {ln.split(None, 1)[0] for ln in content.split("\n") if ln.strip()}
     todo = run
     if done:
-        done_df = spark.createDataFrame([(q,) for q in sorted(done)], "qid string")
+        done_df = local_frame(spark, [(q,) for q in sorted(done)], "qid string")
         todo = run.join(F.broadcast(done_df), "qid", "left_anti")
     ranked = rerank_by_score(todo)
     out = ranked.select(

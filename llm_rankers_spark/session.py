@@ -6,7 +6,29 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-side frame built through Arrow.
+
+    ``rows`` is a sequence of tuples in ``schema`` (a DDL string) column
+    order. ``spark.createDataFrame(list, …)`` ships pickled rows through a
+    Python-RDD job: every consumer of such a frame forks Python workers just
+    to unpickle the rows. Here the rows become one Arrow table on the
+    driver, and Spark decodes it JVM-side into a local relation, so neither
+    building the frame nor scanning it runs a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = spark._parse_ddl(schema)
+    arrow_schema = to_arrow_schema(struct)
+    if rows:
+        cols = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)]
+        table = pa.Table.from_arrays(cols, schema=arrow_schema)
+    else:
+        table = arrow_schema.empty_table()
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _ship_package(spark: SparkSession) -> None:

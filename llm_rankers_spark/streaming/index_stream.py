@@ -28,6 +28,7 @@ from llm_rankers_spark.operators.index_build import (
     build_index_from_forward,
     load_index,
 )
+from llm_rankers_spark.session import local_frame
 
 
 def _manifest_path(root: str) -> str:
@@ -104,7 +105,7 @@ def segment_stats(
             if len(terms) <= 512:
                 p = p.filter(F.col("term").isin(terms))
             else:
-                t_df = spark.createDataFrame([(t,) for t in terms], "term string")
+                t_df = local_frame(spark, [(t,) for t in terms], "term string")
                 p = p.join(F.broadcast(t_df), "term", "left_semi")
         d = p.groupBy("term").agg(F.sum("n").alias("df"))
         df_all = d if df_all is None else df_all.unionByName(d)
@@ -134,7 +135,7 @@ def search_segments(spark: SparkSession, root: str, queries: DataFrame, k: int =
 
     seg_names = list_segments(root)
     if not seg_names:
-        return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+        return local_frame(spark, [], "qid string, docid string, rank int, score double, tag string")
     mode = load_index(spark, os.path.join(root, seg_names[0])).meta.tokenizer_mode
     qrows = queries.select("qid", "query").limit(DRIVER_QUERY_PLAN_MAX + 1).collect()
     terms = None
@@ -143,12 +144,12 @@ def search_segments(spark: SparkSession, root: str, queries: DataFrame, k: int =
         terms = sorted({t for c in counts for t in c})
     n, avgdl, merged_df = segment_stats(spark, root, terms=terms)
     if merged_df is None or (terms is not None and not terms):
-        return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+        return local_frame(spark, [], "qid string, docid string, rank int, score double, tag string")
     if terms is not None:
         rows = [(r["term"], int(r["df"])) for r in merged_df.collect()]
-        merged_df = spark.createDataFrame(rows, "term string, df long") if rows else None
+        merged_df = local_frame(spark, rows, "term string, df long") if rows else None
         if merged_df is None:
-            return spark.createDataFrame([], "qid string, docid string, rank int, score double, tag string")
+            return local_frame(spark, [], "qid string, docid string, rank int, score double, tag string")
     else:
         merged_df = merged_df.persist()
     out = None
